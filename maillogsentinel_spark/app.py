@@ -34,7 +34,10 @@ VERSION = "1.0"
 
 def load_config(path: str | None) -> dict:
     """Subset of the reference INI the analytics engine needs; same
-    sections/keys, same defaults shape (config.py:10-58)."""
+    sections/keys, same defaults shape (config.py:10-58). Other sections
+    are accepted and ignored, among them the reference's DNS-cache
+    section (config.py:36-40): each batch resolves its distinct IPs
+    once, and no cache spans batches."""
     cfg = {
         "working_dir": "./maillogsentinel-work",
         "mail_log": "/var/log/mail.log",
@@ -51,9 +54,6 @@ def load_config(path: str | None) -> dict:
         "log_file": None,
         "log_file_max_bytes": 1_000_000,
         "log_file_backup_count": 5,
-        "dns_cache_enabled": True,
-        "dns_cache_size": 128,
-        "dns_cache_ttl_seconds": 3600,
     }
     if path:
         ini = configparser.ConfigParser()
@@ -83,13 +83,6 @@ def load_config(path: str | None) -> dict:
         ]:
             if ini.has_option("general", key):
                 cfg[dest] = ini.getint("general", key)
-        # [dns_cache] — reference config.py:36-40 typed knobs
-        if ini.has_option("dns_cache", "enabled"):
-            cfg["dns_cache_enabled"] = ini.getboolean("dns_cache", "enabled")
-        if ini.has_option("dns_cache", "size"):
-            cfg["dns_cache_size"] = ini.getint("dns_cache", "size")
-        if ini.has_option("dns_cache", "ttl_seconds"):
-            cfg["dns_cache_ttl_seconds"] = ini.getint("dns_cache", "ttl_seconds")
     return cfg
 
 
@@ -130,11 +123,9 @@ def _spark(cfg: dict):
 
 def run_extract(cfg: dict, year: int, resolver=None) -> int:
     """Default mode: incremental ingest of the mail-log directory into
-    the Parquet store + byte-compat CSV mirror."""
-    from .plans.pipeline import build_events
+    the Parquet store + byte-compat CSV mirror, both appended by each
+    micro-batch. A failed batch raises (non-zero exit from ``main``)."""
     from .sources.dims import load_geo_asn, load_geo_country
-    from .sources.logs import read_logs
-    from .sources.store import write_events, write_events_csv
     from .streaming.ingest import start_ingest
 
     spark = _spark(cfg)
@@ -149,26 +140,19 @@ def run_extract(cfg: dict, year: int, resolver=None) -> int:
     from .operators.rdns import default_socket_resolver
 
     log_dir = os.path.dirname(os.path.abspath(cfg["mail_log"])) or "."
-    store = os.path.join(wd, "store")
     q = start_ingest(
         spark,
         log_dir,
-        store,
+        os.path.join(wd, "store"),
         os.path.join(wd, "checkpoint"),
         year,
         resolver or default_socket_resolver,
         geo_country=geo_c,
         geo_asn=geo_a,
-        rdns_ttl_seconds=(
-            cfg["dns_cache_ttl_seconds"] if cfg["dns_cache_enabled"] else 0
-        ),
-        rdns_max_cache=cfg["dns_cache_size"],
+        csv_path=os.path.join(wd, cfg["csv_filename"] + ".d"),
     )
-    q.awaitTermination(600)
-    if os.path.isdir(store) and glob.glob(os.path.join(store, "**", "*.parquet"),
-                                          recursive=True):
-        ev = spark.read.parquet(store).drop("event_date")
-        write_events_csv(ev, os.path.join(wd, cfg["csv_filename"] + ".d"))
+    # availableNow: the query stops by itself once the backlog is done
+    q.awaitTermination()
     return 0
 
 
@@ -176,10 +160,10 @@ def run_report(cfg: dict, date_s: str, send: bool = False) -> int:
     """--report: aggregate one day from the store, render the
     reference-format text; optionally email it."""
     from .report import daily_report_stats, render_report
+    from .sources.store import read_events
 
     spark = _spark(cfg)
-    store = os.path.join(cfg["working_dir"], "store")
-    ev = spark.read.parquet(store).drop("event_date")
+    ev = read_events(spark, os.path.join(cfg["working_dir"], "store"))
     stats = daily_report_stats(ev, date_s)
     txt = render_report(stats, date_s, server_name=os.uname().nodename)
     print(txt)
@@ -204,18 +188,12 @@ def run_sql_export(cfg: dict, out_dir: str | None = None) -> int:
     (byte-compat S8 shape, timestamped filename). Rows failing NOT-NULL
     casts are quarantined, not silently skipped (documented divergence
     from the reference's offset-advance-past-errors)."""
-    from pyspark.sql import functions as F
-
-    from .schemas import MAIL_CSV_COLUMNS
     from .sources.sqlio import cast_with_mapping, insert_statements, load_mapping
+    from .sources.store import csv_projection, read_events
 
     spark = _spark(cfg)
-    store = os.path.join(cfg["working_dir"], "store")
-    ev = spark.read.parquet(store).drop("event_date")
-    csv_shape = ev.select(
-        F.col("server"),
-        F.date_format("ts", "dd/MM/yyyy HH:mm").alias("date"),
-        *[F.col(c) for c in MAIL_CSV_COLUMNS[2:]],
+    csv_shape = csv_projection(
+        read_events(spark, os.path.join(cfg["working_dir"], "store"))
     )
     specs = load_mapping(cfg["column_mapping_file"] or _default_mapping())
     good, quarantined = cast_with_mapping(csv_shape, specs)

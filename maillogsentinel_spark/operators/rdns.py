@@ -1,19 +1,24 @@
-"""Cached external-lookup enrichment — reference operator J2 (reverse DNS).
+"""External-lookup enrichment — reference operator J2 (reverse DNS).
 
 Reference behavior (/root/reference/lib/maillogsentinel/dns_utils.py):
 - ``socket.gethostbyaddr(ip)``; errors mapped to ``ERRNO <n>`` /
   ``Timeout`` / ``Failed (Unknown)`` (dns_utils.py:40-50);
-- LRU cache (size, TTL) in front of the syscall (dns_utils.py:92-161);
 - downstream row semantics (log_utils.py:105-113): success →
   (hostname, 'OK'); failure → (literal "null", error-string).
 
 Spark-first shape: external lookups must never run once per fact row.
 We project ``distinct(ip)`` (tiny vs. the fact table — shuffle on a
-low-cardinality key), resolve each unique IP exactly once via
-``mapPartitions`` with a per-executor TTL cache, and broadcast the
-resulting dim back onto the fact table. At 100 TB the expensive network
-call count is bounded by |distinct ip|, not |events|, and the fact side
-never shuffles (broadcast hash join).
+low-cardinality key), resolve each unique IP exactly once per call via
+``mapInPandas``, and broadcast the resulting dim back onto the fact
+table. At 100 TB the expensive network call count is bounded by
+|distinct ip|, not |events|, and the fact side never shuffles
+(broadcast hash join).
+
+There is no cache across calls: the reference's LRU+TTL cache
+(dns_utils.py:92-161) has no counterpart here, because within one call
+the IPs are already distinct and nothing is shared between calls (each
+Spark task unpickles its own copy of the resolving closure). A
+streaming micro-batch therefore resolves each of its distinct IPs once.
 
 The resolver is injectable (a Python callable or a static DataFrame),
 exactly as the reference's tests inject a mock
@@ -22,7 +27,6 @@ exactly as the reference's tests inject a mock
 
 from __future__ import annotations
 
-import time
 from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame
@@ -31,10 +35,6 @@ from pyspark.sql import functions as F
 from ..schemas import RDNS_SCHEMA
 
 ResolverFn = Callable[[str], tuple[str | None, str | None]]
-
-# Per-executor process-wide cache {ip: (hostname, error, resolved_at)} —
-# the Spark analogue of the reference's lru_cache+TTL (dns_utils.py:92-161).
-_EXECUTOR_CACHE: dict[str, tuple[str | None, str | None, float]] = {}
 
 
 def default_socket_resolver(ip: str) -> tuple[str | None, str | None]:
@@ -53,14 +53,9 @@ def default_socket_resolver(ip: str) -> tuple[str | None, str | None]:
         return None, "Failed (Unknown)"
 
 
-def resolve_distinct_ips(
-    ips: DataFrame,
-    resolver: ResolverFn,
-    ttl_seconds: float = 3600.0,
-    max_cache: int = 100_000,
-) -> DataFrame:
-    """``ip`` DataFrame → (ip, hostname, error) resolving each distinct IP
-    once per executor per TTL window.
+def resolve_distinct_ips(ips: DataFrame, resolver: ResolverFn) -> DataFrame:
+    """``ip`` DataFrame → (ip, hostname, error), calling ``resolver``
+    once for each distinct IP, on every evaluation of the result.
 
     mapInPandas (Arrow batches), not rdd.mapPartitions: the resolver
     call itself stays row-at-a-time Python (it wraps a syscall), but the
@@ -70,23 +65,14 @@ def resolve_distinct_ips(
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        now = time.monotonic()
         for pdf in batches:
-            hosts: list[str | None] = []
-            errs: list[str | None] = []
-            for ip in pdf["ip"]:
-                hit = _EXECUTOR_CACHE.get(ip)
-                if hit is not None and now - hit[2] < ttl_seconds:
-                    hostname, error = hit[0], hit[1]
-                else:
-                    hostname, error = resolver(ip)
-                    if len(_EXECUTOR_CACHE) >= max_cache:
-                        _EXECUTOR_CACHE.clear()
-                    _EXECUTOR_CACHE[ip] = (hostname, error, now)
-                hosts.append(hostname)
-                errs.append(error)
+            pairs = [resolver(ip) for ip in pdf["ip"]]
             yield pd.DataFrame(
-                {"ip": pdf["ip"], "hostname": hosts, "error": errs}
+                {
+                    "ip": pdf["ip"],
+                    "hostname": [h for h, _ in pairs],
+                    "error": [e for _, e in pairs],
+                }
             )
 
     return ips.select("ip").distinct().mapInPandas(run, RDNS_SCHEMA)
@@ -101,9 +87,7 @@ def enrich_rdns(
     events: DataFrame,
     resolver: ResolverFn | DataFrame,
     ip_col: str = "ip",
-    ttl_seconds: float = 3600.0,
     ip_source: DataFrame | None = None,
-    max_cache: int = 100_000,
 ) -> DataFrame:
     """Add (hostname, reverse_dns_status) to ``events``.
 
@@ -125,7 +109,7 @@ def enrich_rdns(
             if ip_source is not None
             else events.select(F.col(ip_col).alias("ip"))
         )
-        dim = resolve_distinct_ips(ips, resolver, ttl_seconds, max_cache)
+        dim = resolve_distinct_ips(ips, resolver)
     dim = dim.withColumnRenamed("ip", "__rdns_ip")
     joined = events.join(
         F.broadcast(dim), events[ip_col] == dim["__rdns_ip"], "left"

@@ -26,8 +26,6 @@ def build_events(
     resolver: "ResolverFn | DataFrame",
     geo_country: DataFrame | None = None,
     geo_asn: DataFrame | None = None,
-    rdns_ttl_seconds: float = 3600.0,
-    rdns_max_cache: int = 100_000,
 ) -> DataFrame:
     """raw log lines → canonical mail-events DataFrame.
 
@@ -35,8 +33,8 @@ def build_events(
     'N/A', which is a legal reference state (no ip_info_mgr ⇒ 'N/A',
     log_utils.py:115-123).
 
-    ``rdns_ttl_seconds``/``rdns_max_cache`` mirror the reference's
-    [dns_cache] INI knobs (config.py:36-40); ttl 0 disables caching.
+    ``resolver`` is called once per distinct IP each time the result is
+    evaluated; persist the result if it feeds more than one action.
     """
     from pyspark.sql import functions as F
 
@@ -54,9 +52,7 @@ def build_events(
         lines = lines.repartition(cpus)
 
     ev = parse_sasl_lines(lines, year=year)
-    ev = enrich_rdns(
-        ev, resolver, ttl_seconds=rdns_ttl_seconds, max_cache=rdns_max_cache
-    )
+    ev = enrich_rdns(ev, resolver)
     if geo_country is not None and geo_asn is not None:
         ev = enrich_geo(ev, geo_country, geo_asn)
     else:

@@ -80,16 +80,23 @@ def read_events(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path).drop("event_date")
 
 
-def write_events_csv(events: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Reference-compatible CSV shape (parser.py:106-121): all-string,
-    `;`-separated, minimal quoting, header."""
-    out = events.select(
+def csv_projection(events: DataFrame) -> DataFrame:
+    """Events → the reference CSV row shape (parser.py:106-121): the
+    ``MAIL_CSV_COLUMNS`` in order, ``ts`` rendered as `dd/MM/yyyy HH:mm`.
+    The CSV mirror and both SQL exporters start from this shape."""
+    return events.select(
         F.col("server"),
         F.date_format("ts", "dd/MM/yyyy HH:mm").alias("date"),
         *[F.col(c) for c in MAIL_CSV_COLUMNS[2:]],
     )
+
+
+def write_events_csv(events: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """Reference-compatible CSV: :func:`csv_projection`, all-string,
+    `;`-separated, minimal quoting, a header in every part file."""
     (
-        out.write.mode(mode)
+        csv_projection(events)
+        .write.mode(mode)
         .option("sep", ";")
         .option("header", "true")
         .option("quoteAll", "false")

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.pipeline import build_events
-from ..sources.store import write_events
+from ..sources.store import csv_projection, write_events, write_events_csv
 
 
 def start_ingest(
@@ -39,22 +39,32 @@ def start_ingest(
     geo_asn: DataFrame | None = None,
     available_now: bool = True,
     processing_time: str = "60 seconds",
-    rdns_ttl_seconds: float = 3600.0,
-    rdns_max_cache: int = 100_000,
+    csv_path: str | None = None,
 ):
     """Stream log files from ``log_dir`` into the events store.
 
     ``available_now=True`` processes everything pending then stops — the
     direct analogue of the reference's one-shot systemd-timer run.
+
+    ``csv_path``: also append each micro-batch's events to the
+    byte-compat CSV mirror there (one more sink of the same batch, so a
+    run costs O(new lines), never O(history)). With two sinks the
+    batch's events are persisted, so the log scan and rDNS run once; a
+    single sink skips the persist and its per-batch cost.
     """
     lines = spark.readStream.text(log_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        ev = build_events(
-            batch_df, year, resolver, geo_country, geo_asn,
-            rdns_ttl_seconds=rdns_ttl_seconds, rdns_max_cache=rdns_max_cache,
-        )
-        write_events(ev, store_path, mode="append")
+        ev = build_events(batch_df, year, resolver, geo_country, geo_asn)
+        if csv_path is None:
+            write_events(ev, store_path, mode="append")
+            return
+        ev.persist()
+        try:
+            write_events(ev, store_path, mode="append")
+            write_events_csv(ev, csv_path, mode="append")
+        finally:
+            ev.unpersist()
 
     writer = lines.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint_dir
@@ -122,18 +132,7 @@ def start_sql_export(
     schema = StructType(
         list(MAIL_EVENTS_SCHEMA.fields) + [StructField("event_date", DateType())]
     )
-    src = spark.readStream.schema(schema).parquet(store_path)
-    csv_shaped = src.select(
-        "server",
-        F.date_format("ts", "dd/MM/yyyy HH:mm").alias("date"),
-        "ip",
-        "user",
-        "hostname",
-        "reverse_dns_status",
-        "country_code",
-        "asn",
-        "aso",
-    )
+    csv_shaped = csv_projection(spark.readStream.schema(schema).parquet(store_path))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         good, quarantine = cast_with_mapping(batch_df, specs)

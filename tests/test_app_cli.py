@@ -1,7 +1,10 @@
 """Main CLI modes end-to-end: extract -> report -> sql-export -> sql-import."""
 
+import csv
 import os
 import sqlite3
+
+import pytest
 
 from maillogsentinel_spark import app
 
@@ -71,10 +74,65 @@ def test_cli_reset_archives_data(spark, tmp_path, capsys, monkeypatch):
     assert os.path.isdir(archive) and os.path.isdir(os.path.join(archive, "store"))
 
 
+def _mirror_rows(wd) -> list[tuple]:
+    """Data rows of the CSV mirror, minus the header of each part file."""
+    rows = []
+    for part in sorted((wd / "maillogsentinel.csv.d").glob("*.csv")):
+        with open(part, encoding="utf-8", newline="") as f:
+            rows += [tuple(r) for r in list(csv.reader(f, delimiter=";"))[1:]]
+    return rows
+
+
+def _setup_extract(spark, tmp_path, monkeypatch):
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    wd = tmp_path / "work"
+    monkeypatch.setattr(app, "_spark", lambda cfg: spark)
+    cfg = app.load_config(None)
+    cfg.update(working_dir=str(wd), mail_log=str(logs / "mail.log"))
+    return logs, wd, cfg
+
+
+def test_csv_mirror_equals_store_after_two_extracts(spark, tmp_path, monkeypatch):
+    """Each ingest batch appends its own events to the CSV mirror; after
+    two extracts with new log lines between them, the mirror holds
+    exactly the store's rows."""
+    from maillogsentinel_spark.sources.store import csv_projection, read_events
+
+    logs, wd, cfg = _setup_extract(spark, tmp_path, monkeypatch)
+    resolver = lambda ip: ("h-" + ip, None)  # noqa: E731
+    (logs / "mail.log").write_text("".join(LINE.format(s=i, o=i) for i in range(3)))
+    assert app.run_extract(cfg, year=2025, resolver=resolver) == 0
+    assert len(_mirror_rows(wd)) == 3
+    # the file source tracks files: new lines arrive in a new file
+    (logs / "mail.log.2").write_text(
+        "".join(LINE.format(s=i, o=i) for i in range(10, 15))
+    )
+    assert app.run_extract(cfg, year=2025, resolver=resolver) == 0
+
+    store = [tuple(r) for r in csv_projection(read_events(spark, str(wd / "store"))).collect()]
+    assert len(store) == 8
+    assert sorted(_mirror_rows(wd)) == sorted(store)
+
+
+def failing_resolver(ip):
+    raise RuntimeError(f"resolver down for {ip}")
+
+
+def test_extract_failed_batch_raises_and_writes_no_mirror(spark, tmp_path, monkeypatch):
+    """A failed micro-batch must surface as an exception (a non-zero exit
+    from main), not a return 0 over a partial store and mirror."""
+    logs, wd, cfg = _setup_extract(spark, tmp_path, monkeypatch)
+    (logs / "mail.log").write_text("".join(LINE.format(s=i, o=i) for i in range(3)))
+    with pytest.raises(Exception, match="resolver down"):
+        app.run_extract(cfg, year=2025, resolver=failing_resolver)
+    assert _mirror_rows(wd) == []
+
+
 def test_ini_operational_knobs(tmp_path):
     # reference config.py:31-40 + :117-119 parity: [general] log_level,
-    # [dns_cache] enabled/size/ttl_seconds, [report] sender_override +
-    # subject_prefix all load with reference defaults when absent.
+    # [report] sender_override + subject_prefix all load with reference
+    # defaults when absent; a reference [dns_cache] section still loads.
     ini = tmp_path / "knobs.conf"
     ini.write_text("""[general]
 log_level = DEBUG
@@ -89,16 +147,12 @@ subject_prefix = [SEC]
 """)
     cfg = app.load_config(str(ini))
     assert cfg["log_level"] == "DEBUG"
-    assert cfg["dns_cache_enabled"] is False
-    assert cfg["dns_cache_size"] == 9
-    assert cfg["dns_cache_ttl_seconds"] == 60
     assert cfg["sender_override"] == "sentinel@mx.example.org"
     assert cfg["subject_prefix"] == "[SEC]"
 
     defaults = app.load_config(None)
-    assert defaults["dns_cache_enabled"] is True
-    assert defaults["dns_cache_size"] == 128
-    assert defaults["dns_cache_ttl_seconds"] == 3600
+    # the [dns_cache] section is accepted and adds no keys
+    assert set(cfg) == set(defaults)
     assert defaults["subject_prefix"] == "[MailLogSentinel]"
     assert defaults["sender_override"] is None
 

@@ -40,6 +40,10 @@ def test_enrich_with_callable(spark):
     # distinct projection: duplicate 1.1.1.1 resolved once
     calls = sorted(f.rsplit("-", 1)[0] for f in os.listdir(CALL_DIR))
     assert calls == ["1.1.1.1", "2.2.2.2", "3.3.3.3"]
+    # no hidden state across calls: a second run resolves every IP again
+    enrich_rdns(df, fake_resolver).collect()
+    calls = sorted(f.rsplit("-", 1)[0] for f in os.listdir(CALL_DIR))
+    assert calls == sorted(["1.1.1.1", "2.2.2.2", "3.3.3.3"] * 2)
 
 
 def test_enrich_with_table(spark):
