@@ -30,19 +30,23 @@ def cpu_count() -> int:
 def _local_scratch_dir() -> str | None:
     """Shuffle/spill scratch (``spark.local.dir``) for LOCAL-master runs.
 
-    Same policy as the throwaway-fixture scratch
-    (plans/queries._scratch_dir, round 10): local-mode shuffle files are
-    pure intra-run scratch — written, fetched, and deleted inside one
-    session — so on a box with tmpfs they belong there, not on a
-    (possibly externally contended) data disk. Measured effect: the
-    stream/tx micro-batch queries' wall tracked the host's disk-load
-    canary (io_ratio 3-4x => 2x query wall) purely through blockmgr
-    writes under /tmp; with shuffle scratch on tmpfs they decouple.
+    Returns ``$SPARK_GRAFT_LOCAL_DIR`` when set. Otherwise returns
+    ``/dev/shm`` only when that directory exists and ``os.statvfs``
+    reports at least 16 GiB free (``f_bavail * f_frsize >= 16 << 30``);
+    in every other case it returns ``None`` and ``spark.local.dir`` is
+    left alone.
 
-    Override with $SPARK_GRAFT_LOCAL_DIR. On a real cluster (non-local
-    master) this is never applied — executors get their local dirs from
-    the cluster manager (YARN/k8s), where tmpfs sizing is an ops
-    decision, not a library default.
+    Local-mode shuffle files are pure intra-run scratch — written,
+    fetched, and deleted inside one session — so on a box with roomy
+    tmpfs they belong there, not on a (possibly externally contended)
+    data disk. Measured effect: the stream/tx micro-batch queries' wall
+    tracked the host's disk-load canary (io_ratio 3-4x => 2x query wall)
+    purely through blockmgr writes under /tmp; with shuffle scratch on
+    tmpfs they decouple.
+
+    On a real cluster (non-local master) this is never applied —
+    executors get their local dirs from the cluster manager (YARN/k8s),
+    where tmpfs sizing is an ops decision, not a library default.
     """
     env = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if env:

@@ -13,10 +13,34 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
 )
 sys.path.insert(0, os.path.join(REPO, "tests"))
 
-from maillogsentinel_spark.session import get_spark  # noqa: E402
+from maillogsentinel_spark import session as _session  # noqa: E402
+
+# What session._local_scratch_dir() returned while the `spark` fixture
+# built the session. Recorded at build time because /dev/shm's free space
+# moves during the run (query fixtures are written there), so calling the
+# policy again later could give a different answer than the session got.
+_SCRATCH_DECISIONS: list[str | None] = []
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="mls-tests", shuffle_partitions=8)
+    decide = _session._local_scratch_dir
+
+    def recording_decide():
+        decision = decide()
+        _SCRATCH_DECISIONS.append(decision)
+        return decision
+
+    _session._local_scratch_dir = recording_decide
+    try:
+        s = _session.get_spark(app_name="mls-tests", shuffle_partitions=8)
+    finally:
+        _session._local_scratch_dir = decide
     yield s
+
+
+@pytest.fixture(scope="session")
+def spark_scratch_decision(spark):
+    """The scratch dir the local-master policy chose for `spark`."""
+    assert len(_SCRATCH_DECISIONS) == 1, _SCRATCH_DECISIONS
+    return _SCRATCH_DECISIONS[0]
