@@ -13,8 +13,8 @@ What replaces what:
   ``working_dir/checkpoint`` (exactly-once, rotation-safe);
 - the growing report-bottleneck CSV → a date-partitioned Parquet store
   (the CSV is still emitted for byte-compat consumers);
-- `--report` reads one day's partition (partition pruning), not the
-  whole history.
+- `--report` aggregates one day's partition (partition pruning), not
+  the whole history; only its store-total line counts every row.
 
 Wall-clock inputs are injectable (`--date`, `--year`) per the
 reproducibility rule in SURVEY §7 (hard part 3).

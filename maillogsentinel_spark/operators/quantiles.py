@@ -296,8 +296,8 @@ def median_mad(
     dbl = lambda c: c.cast("double")  # noqa: E731 — local shorthand
     max_dev = F.greatest(dbl(F.col("_max")) - m, m - dbl(F.col("_min")))
     ap = lambda i: dbl(F.element_at("_ap", i))  # noqa: E731
-    r_s = F.greatest(F.lit(0.0), F.least(ap(5) - m, m - ap(3)))
-    r_b = F.least(F.greatest(ap(6) - m, m - ap(4)), max_dev)
+    r_s = F.greatest(F.lit(0.0), F.least(ap(5) - m, m - ap(4)))
+    r_b = F.least(F.greatest(ap(6) - m, m - ap(3)), max_dev)
     mad_bounds = enr.select(
         *g,
         "_n",

@@ -1,66 +1,67 @@
-"""Daily-report aggregations — reference A1–A10
-(/root/reference/lib/maillogsentinel/report.py:60-218, one Python-dict
-hash-agg pass over the whole CSV).
+"""Daily-report aggregations — reference A1–A10 (the reference's
+report.py:60-218, one Python-dict hash-agg pass over the whole CSV).
 
-Spark shape: cache the day-filtered slice once, then run the small agg
-queries against it. Each top-k is ``orderBy(count desc, key asc).limit(k)``
-— Catalyst plans TakeOrderedAndProject (per-partition heaps + driver
-merge), never a full sort. The deterministic secondary key replaces the
-reference's Python stable-sort tie order (report.py:176-193), which
-Spark cannot reproduce (SURVEY §2.4 caveat).
-
-At scale the events store is partitioned by day (sources/store.py), so
-the day filter is partition pruning, not a scan.
+Spark shape: one grouped count of the day by every column the report
+reads, collected (a day is at most tens of thousands of groups); every
+total and top-k is summed from those rows on the driver. Ties break by
+keys ascending with NULL first, as Spark's ``asc`` does, in place of the
+reference's stable-sort tie order (report.py:176-193); Python's ``str``
+order equals Spark's UTF-8 binary order. On the store, the day filter is
+on the ``event_date`` partition column, so it reads one partition.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+from collections import Counter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def top_counts(df: DataFrame, keys: list[str], k: int | None = 10) -> DataFrame:
-    """group-by → count → deterministic top-k (count desc, keys asc)."""
-    agg = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("count"))
-    ordered = agg.orderBy(F.desc("count"), *[F.asc(c) for c in keys])
-    return ordered.limit(k) if k else ordered
+_KEYS = ("user", "ip", "hostname", "country_code", "asn", "aso", "reverse_dns_status")
 
 
-def daily_report_stats(
-    events: DataFrame, report_date: dt.date | str, ts_col: str = "ts"
-) -> dict:
-    """All report aggregations for one day; returns dict of DataFrames
-    plus scalar counts (collected — they are single numbers).
+def day_slice(events: DataFrame, report_date: dt.date) -> DataFrame:
+    """``report_date``'s events, by ``event_date`` when the frame has it."""
+    day = F.col("event_date") if "event_date" in events.columns else F.to_date("ts")
+    return events.filter(day == F.lit(report_date))
 
-    ``report_date`` accepts a ``datetime.date`` or the reference's
-    ``dd/mm/YYYY`` "today" string (report.py:263).
 
-    Keys mirror report.py:97-108's stats dict.
-    """
+def _top(counts: Counter, k: int | None = 10) -> list[tuple]:
+    """``(*key, count)`` by count desc, then keys asc with NULL first."""
+    def order(kv):
+        return -kv[1], [(v is not None, v) for v in kv[0]]
+
+    return [(*key, n) for key, n in sorted(counts.items(), key=order)[:k]]
+
+
+def daily_report_stats(events: DataFrame, report_date: dt.date | str) -> dict:
+    """All report aggregations for one day: ints and ``(*keys, count)``
+    lists. ``report_date`` is a ``datetime.date`` or the reference's
+    ``dd/mm/YYYY`` "today" string (report.py:263). Keys mirror
+    report.py:97-108's stats dict."""
     if isinstance(report_date, str):
         report_date = dt.datetime.strptime(report_date, "%d/%m/%Y").date()
-    day = events.filter(F.to_date(F.col(ts_col)) == F.lit(report_date)).cache()
+    groups = day_slice(events, report_date).groupBy(*_KEYS).count().collect()
 
-    stats = {
-        "total_today": day.count(),  # A1 (report.py:153)
+    def counts(*cols: str) -> Counter:
+        out: Counter = Counter()
+        for g in groups:
+            out[tuple(g[c] for c in cols)] += g["count"]
+        return out
+
+    # A7/A8 (report.py:166-169,191-193): a NULL status is no failure, as in SQL
+    status = counts("reverse_dns_status")
+    fails = Counter({k: n for k, n in status.items() if k[0] not in (None, "OK")})
+    return {
+        "total_today": sum(g["count"] for g in groups),  # A1 (report.py:153)
         # A2 (report.py:155-156,176-178): group by (user, ip, hostname, country)
-        "top10_today": top_counts(day, ["user", "ip", "hostname", "country_code"]),
-        "top10_usernames": top_counts(day, ["user"]),  # A3
-        "top10_countries": top_counts(day, ["country_code"]),  # A4
-        "top10_aso": top_counts(day, ["aso"]),  # A5
-        "top10_asn": top_counts(day, ["asn"]),  # A6
-        # A7 (report.py:166-167)
-        "total_rev_dns_failures": day.filter(
-            F.col("reverse_dns_status") != "OK"
-        ).count(),
-        # A8 (report.py:168-169,191-193): unbounded, sorted
-        "rev_dns_error_counts": top_counts(
-            day.filter(F.col("reverse_dns_status") != "OK"),
-            ["reverse_dns_status"],
-            k=None,
-        ),
+        "top10_today": _top(counts("user", "ip", "hostname", "country_code")),
+        "top10_usernames": _top(counts("user")),  # A3
+        "top10_countries": _top(counts("country_code")),  # A4
+        "top10_aso": _top(counts("aso")),  # A5
+        "top10_asn": _top(counts("asn")),  # A6
+        "total_rev_dns_failures": sum(fails.values()),  # A7
+        "rev_dns_error_counts": _top(fails, k=None),  # A8: unbounded, sorted
         "total_events": events.count(),  # A9 (csv_lines, report.py:132)
     }
-    return stats

@@ -32,17 +32,13 @@ def _section(title: str, rows: list[tuple], headers: list[str]) -> list[str]:
 def render_report(
     stats: dict, report_date: dt.date | str, server_name: str = "mailserver"
 ) -> str:
-    """stats: output of daily_report_stats with DataFrames collect()ed
-    into lists of Rows (see report job in plans/pipeline.py).
+    """stats: the output of daily_report_stats (ints and lists of
+    ``(*keys, count)`` tuples).
 
     ``report_date`` accepts a ``datetime.date`` or the reference's
     ``dd/mm/YYYY`` string form (report.py:263)."""
     if isinstance(report_date, str):
         report_date = dt.datetime.strptime(report_date, "%d/%m/%Y").date()
-
-    def rows(key):
-        v = stats[key]
-        return [tuple(r) for r in (v.collect() if hasattr(v, "collect") else v)]
 
     lines: list[str] = []
     lines.append(f"MailLogSentinel-Spark report for {server_name}")
@@ -52,25 +48,25 @@ def render_report(
     lines.append("")
     lines += _section(
         "Top 10 failed authentications today (user, ip, hostname, country):",
-        rows("top10_today"),
+        stats["top10_today"],
         ["user", "ip", "hostname", "country", "count"],
     )
     lines.append("")
-    lines += _section("Top 10 usernames:", rows("top10_usernames"), ["user", "count"])
+    lines += _section("Top 10 usernames:", stats["top10_usernames"], ["user", "count"])
     lines.append("")
     lines += _section(
-        "Top 10 countries:", rows("top10_countries"), ["country", "count"]
+        "Top 10 countries:", stats["top10_countries"], ["country", "count"]
     )
     lines.append("")
-    lines += _section("Top 10 ASO:", rows("top10_aso"), ["aso", "count"])
+    lines += _section("Top 10 ASO:", stats["top10_aso"], ["aso", "count"])
     lines.append("")
-    lines += _section("Top 10 ASN:", rows("top10_asn"), ["asn", "count"])
+    lines += _section("Top 10 ASN:", stats["top10_asn"], ["asn", "count"])
     lines.append("")
     lines.append(
         f"Reverse DNS failures today: {stats['total_rev_dns_failures']}"
     )
     lines += _section(
-        "Breakdown:", rows("rev_dns_error_counts"), ["status", "count"]
+        "Breakdown:", stats["rev_dns_error_counts"], ["status", "count"]
     )
     lines.append("")
     lines.append(f"Total events in store: {stats['total_events']}")
@@ -78,24 +74,19 @@ def render_report(
 
 
 def collect_compat_stats(stats: dict) -> dict:
-    """Adapt daily_report_stats' dict (DataFrames + scalars) to the
-    reference renderer's collected shapes (report.py:97-108)."""
-
-    def rows(key):
-        v = stats[key]
-        return [tuple(r) for r in (v.collect() if hasattr(v, "collect") else v)]
-
+    """Adapt daily_report_stats' dict (ints and tuple lists) to the
+    reference renderer's shapes (report.py:97-108)."""
     return {
         "total_today": stats["total_today"],
         "top10_today": [
-            ((u, ip, h, c), n) for u, ip, h, c, n in rows("top10_today")
+            ((u, ip, h, c), n) for u, ip, h, c, n in stats["top10_today"]
         ],
-        "top10_usernames": rows("top10_usernames"),
-        "top10_countries": rows("top10_countries"),
-        "top10_aso": rows("top10_aso"),
-        "top10_asn": rows("top10_asn"),
+        "top10_usernames": stats["top10_usernames"],
+        "top10_countries": stats["top10_countries"],
+        "top10_aso": stats["top10_aso"],
+        "top10_asn": stats["top10_asn"],
         "total_rev_dns_failures": stats["total_rev_dns_failures"],
-        "rev_dns_error_counts": rows("rev_dns_error_counts"),
+        "rev_dns_error_counts": stats["rev_dns_error_counts"],
         "csv_lines_str": str(stats["total_events"]),
         "csv_size_k_str": stats.get("csv_size_k_str", "0.0 KB"),
     }

@@ -77,7 +77,7 @@ def write_events(events: DataFrame, path: str, mode: str = "append") -> None:
 
 
 def read_events(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path).drop("event_date")
+    return spark.read.parquet(path)
 
 
 def csv_projection(events: DataFrame) -> DataFrame:

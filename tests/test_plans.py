@@ -165,10 +165,14 @@ def test_tfidf_no_cartesian_and_windows_partitioned(spark):
 
 
 def test_events_store_day_filter_prunes_partitions(spark, tmp_path):
-    """The daily report's day filter must become a PartitionFilter on the
-    date-partitioned store — scanning one day, not the history."""
+    """The daily report's day selection over ``read_events`` must become a
+    PartitionFilter on the date-partitioned store — scanning one day, not
+    the history."""
+    import datetime as dt
+
     from pyspark.sql import functions as F
 
+    from maillogsentinel_spark.report.analyze import day_slice
     from maillogsentinel_spark.sources.store import read_events, write_events
 
     ev = spark.createDataFrame(
@@ -180,7 +184,7 @@ def test_events_store_day_filter_prunes_partitions(spark, tmp_path):
     )
     path = str(tmp_path / "store")
     write_events(ev, path)
-    got = read_events(spark, path).filter(F.col("event_date") == "2025-08-02")
+    got = day_slice(read_events(spark, path), dt.date(2025, 8, 2))
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan and "event_date" in plan.split(
         "PartitionFilters"

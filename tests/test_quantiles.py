@@ -152,8 +152,8 @@ def test_median_mad_matches_two_pass_scaffold(spark):
     """The fused median+MAD operator (one shared stats pass, MAD window
     derived from the median pass's sketch) must be BIT-identical to two
     independent exact_quantiles runs — both above and below the
-    _SMALL_N full-window gate, and under duplicate-heavy and constant
-    distributions (mad = 0)."""
+    _SMALL_N full-window gate, under left- and right-skewed values, and
+    under duplicate-heavy and constant distributions (mad = 0)."""
     import random
 
     from maillogsentinel_spark.operators.quantiles import median_mad
@@ -170,6 +170,9 @@ def test_median_mad_matches_two_pass_scaffold(spark):
     rows += [("d", 5.0) for _ in range(50)]
     # group e: single row
     rows += [("e", 42.0)]
+    # group f: large, left-skewed — the MAD window's lower side must use
+    # the .40 quantile and its upper side the .24 one
+    rows += [("f", -rnd.expovariate(0.3)) for _ in range(5000)]
     df = spark.createDataFrame(rows, "g string, v double")
 
     fused = {

@@ -5,6 +5,8 @@ date ⇒ total_today=3, top entry count=2, dns failures=1, store total=4."""
 
 import datetime as dt
 
+from pyspark.sql import functions as F
+
 from maillogsentinel_spark.report.analyze import daily_report_stats
 from maillogsentinel_spark.report.render import render_report
 from maillogsentinel_spark.schemas import MAIL_EVENTS_SCHEMA
@@ -27,11 +29,11 @@ def _events(spark):
 def test_golden_stats(spark):
     stats = daily_report_stats(_events(spark), TODAY)
     assert stats["total_today"] == 3
-    top = stats["top10_today"].collect()
+    top = stats["top10_today"]
     assert tuple(top[0]) == ("user1", "1.1.1.1", "host1", "US", 2)
     assert stats["total_rev_dns_failures"] == 1
     assert stats["total_events"] == 4
-    errs = stats["rev_dns_error_counts"].collect()
+    errs = stats["rev_dns_error_counts"]
     assert [(r[0], r[1]) for r in errs] == [("Timeout", 1)]
 
 
@@ -46,5 +48,53 @@ def test_render_smoke(spark):
 def test_topk_tiebreak_deterministic(spark):
     stats = daily_report_stats(_events(spark), TODAY)
     # user2 vs others with count 1 → tie broken by key asc
-    users = [tuple(r) for r in stats["top10_usernames"].collect()]
+    users = [tuple(r) for r in stats["top10_usernames"]]
     assert users == [("user1", 2), ("user2", 1)]
+
+    # a NULL user ties at count 1 and sorts first; user4 ties with
+    # itself across ip and hostname, ordered as strings ("10." < "5.");
+    # a NULL rDNS status is no failure, as with SQL !=
+    t = dt.datetime(2025, 9, 28, 11, 0)
+    extra = [
+        ("srv", t, "9.9.9.9", None, "h9", "OK", "DE", "3", "ISP3"),
+        ("srv", t, "5.5.5.5", "user4", "hostb", "OK", "FR", "2", "ISP2"),
+        ("srv", t, "5.5.5.5", "user4", "hosta", "OK", "FR", "2", "ISP2"),
+        ("srv", t, "10.0.0.1", "user4", "hostz", None, "FR", "2", "ISP2"),
+    ]
+    ev = _events(spark).union(spark.createDataFrame(extra, MAIL_EVENTS_SCHEMA))
+    stats = daily_report_stats(ev, TODAY)
+    assert stats["top10_usernames"] == [
+        ("user4", 3), ("user1", 2), (None, 1), ("user2", 1)
+    ]
+    assert stats["top10_today"] == [
+        ("user1", "1.1.1.1", "host1", "US", 2),
+        (None, "9.9.9.9", "h9", "DE", 1),
+        ("user2", "2.2.2.2", "null", "N/A", 1),
+        ("user4", "10.0.0.1", "hostz", "FR", 1),
+        ("user4", "5.5.5.5", "hosta", "FR", 1),
+        ("user4", "5.5.5.5", "hostb", "FR", 1),
+    ]
+    assert stats["total_rev_dns_failures"] == 1
+    assert stats["rev_dns_error_counts"] == [("Timeout", 1)]
+    # the same order Spark's orderBy(count desc, keys asc) gives
+    day = ev.filter(F.to_date("ts") == F.lit(TODAY))
+    for key, cols in [
+        ("top10_today", ["user", "ip", "hostname", "country_code"]),
+        ("top10_usernames", ["user"]),
+        ("top10_countries", ["country_code"]),
+        ("top10_aso", ["aso"]),
+        ("top10_asn", ["asn"]),
+    ]:
+        spark_order = (
+            day.groupBy(*cols).count()
+            .orderBy(F.desc("count"), *[F.asc(c) for c in cols]).collect()
+        )
+        assert stats[key] == [tuple(r) for r in spark_order]
+
+
+def test_report_leaves_no_cached_data(spark):
+    """The report owns no cache: Spark's cache manager holds nothing
+    after daily_report_stats returns."""
+    spark.catalog.clearCache()
+    daily_report_stats(_events(spark), TODAY)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
