@@ -1,38 +1,39 @@
 """Daily-report aggregations — reference A1–A10 (the reference's
 report.py:60-218, one Python-dict hash-agg pass over the whole CSV).
 
-Spark shape: one grouped count of the day by every column the report
-reads, collected (a day is at most tens of thousands of groups); every
-total and top-k is summed from those rows on the driver. Ties break by
-keys ascending with NULL first, as Spark's ``asc`` does, in place of the
-reference's stable-sort tie order (report.py:176-193); Python's ``str``
-order equals Spark's UTF-8 binary order. On the store, the day filter is
-on the ``event_date`` partition column, so it reads one partition.
+Spark shape: one ``GROUPING SETS`` count of the day (one scan, one
+shuffle), ranked per set by count desc, then keys asc with NULL first
+(in place of the reference's stable-sort tie order, report.py:176-193).
+Only each top-10's ten rows and the rDNS status rows reach the driver.
+On the store the day filter is on the ``event_date`` partition column.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-from collections import Counter
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _KEYS = ("user", "ip", "hostname", "country_code", "asn", "aso", "reverse_dns_status")
+_SETS = {  # report.py:97-108 stats key -> grouping set, in _KEYS order
+    "top10_today": ("user", "ip", "hostname", "country_code"),  # A2
+    "top10_usernames": ("user",),  # A3
+    "top10_countries": ("country_code",),  # A4
+    "top10_aso": ("aso",),  # A5
+    "top10_asn": ("asn",),  # A6
+    "status": ("reverse_dns_status",),  # A1, A7, A8: every row, unbounded
+}
+_GID = {  # Spark's grouping_id(): a bit per key not in the set, first key highest
+    name: sum(1 << (len(_KEYS) - 1 - i) for i, c in enumerate(_KEYS) if c not in cols)
+    for name, cols in _SETS.items()
+}
 
 
 def day_slice(events: DataFrame, report_date: dt.date) -> DataFrame:
     """``report_date``'s events, by ``event_date`` when the frame has it."""
     day = F.col("event_date") if "event_date" in events.columns else F.to_date("ts")
     return events.filter(day == F.lit(report_date))
-
-
-def _top(counts: Counter, k: int | None = 10) -> list[tuple]:
-    """``(*key, count)`` by count desc, then keys asc with NULL first."""
-    def order(kv):
-        return -kv[1], [(v is not None, v) for v in kv[0]]
-
-    return [(*key, n) for key, n in sorted(counts.items(), key=order)[:k]]
 
 
 def daily_report_stats(events: DataFrame, report_date: dt.date | str) -> dict:
@@ -42,26 +43,27 @@ def daily_report_stats(events: DataFrame, report_date: dt.date | str) -> dict:
     report.py:97-108's stats dict."""
     if isinstance(report_date, str):
         report_date = dt.datetime.strptime(report_date, "%d/%m/%Y").date()
-    groups = day_slice(events, report_date).groupBy(*_KEYS).count().collect()
-
-    def counts(*cols: str) -> Counter:
-        out: Counter = Counter()
-        for g in groups:
-            out[tuple(g[c] for c in cols)] += g["count"]
-        return out
-
+    rank = Window.partitionBy("gid").orderBy(F.desc("count"), *map(F.asc, _KEYS))
+    rows = sorted(
+        day_slice(events, report_date)
+        .groupingSets(list(_SETS.values()), *_KEYS)
+        .agg(F.count("*").alias("count"), F.grouping_id().alias("gid"))
+        .withColumn("rn", F.row_number().over(rank))
+        .filter((F.col("rn") <= 10) | (F.col("gid") == _GID["status"]))
+        .collect(),
+        key=lambda r: r["rn"],
+    )
+    out = {
+        k: [(*(r[c] for c in _SETS[k]), r["count"]) for r in rows if r["gid"] == g]
+        for k, g in _GID.items()
+    }
+    status = out.pop("status")
     # A7/A8 (report.py:166-169,191-193): a NULL status is no failure, as in SQL
-    status = counts("reverse_dns_status")
-    fails = Counter({k: n for k, n in status.items() if k[0] not in (None, "OK")})
+    fails = [(s, n) for s, n in status if s not in (None, "OK")]
     return {
-        "total_today": sum(g["count"] for g in groups),  # A1 (report.py:153)
-        # A2 (report.py:155-156,176-178): group by (user, ip, hostname, country)
-        "top10_today": _top(counts("user", "ip", "hostname", "country_code")),
-        "top10_usernames": _top(counts("user")),  # A3
-        "top10_countries": _top(counts("country_code")),  # A4
-        "top10_aso": _top(counts("aso")),  # A5
-        "top10_asn": _top(counts("asn")),  # A6
-        "total_rev_dns_failures": sum(fails.values()),  # A7
-        "rev_dns_error_counts": _top(fails, k=None),  # A8: unbounded, sorted
+        "total_today": sum(n for _, n in status),  # A1 (report.py:153)
+        **out,
+        "total_rev_dns_failures": sum(n for _, n in fails),  # A7
+        "rev_dns_error_counts": fails,  # A8: unbounded, count desc
         "total_events": events.count(),  # A9 (csv_lines, report.py:132)
     }

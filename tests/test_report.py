@@ -5,8 +5,6 @@ date ⇒ total_today=3, top entry count=2, dns failures=1, store total=4."""
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
 from maillogsentinel_spark.report.analyze import daily_report_stats
 from maillogsentinel_spark.report.render import render_report
 from maillogsentinel_spark.schemas import MAIL_EVENTS_SCHEMA
@@ -76,20 +74,28 @@ def test_topk_tiebreak_deterministic(spark):
     ]
     assert stats["total_rev_dns_failures"] == 1
     assert stats["rev_dns_error_counts"] == [("Timeout", 1)]
-    # the same order Spark's orderBy(count desc, keys asc) gives
-    day = ev.filter(F.to_date("ts") == F.lit(TODAY))
-    for key, cols in [
-        ("top10_today", ["user", "ip", "hostname", "country_code"]),
-        ("top10_usernames", ["user"]),
-        ("top10_countries", ["country_code"]),
-        ("top10_aso", ["aso"]),
-        ("top10_asn", ["asn"]),
-    ]:
-        spark_order = (
-            day.groupBy(*cols).count()
-            .orderBy(F.desc("count"), *[F.asc(c) for c in cols]).collect()
-        )
-        assert stats[key] == [tuple(r) for r in spark_order]
+
+
+def test_top10_bounded_breakdown_not(spark):
+    """Each top-k keeps its ten best rows; the rDNS failure breakdown
+    keeps every status, as the reference's unbounded breakdown does."""
+    t = dt.datetime(2025, 9, 28, 12, 0)
+    rows = [
+        ("srv", t, "7.7.7.7", f"u{i:02d}", "h", f"E{i:02d}", "DE", "3", "ISP3")
+        for i in range(12)
+    ]
+    ev = _events(spark).union(spark.createDataFrame(rows, MAIL_EVENTS_SCHEMA))
+    stats = daily_report_stats(ev, TODAY)
+    assert stats["total_today"] == 15
+    assert stats["top10_usernames"][:3] == [("user1", 2), ("u00", 1), ("u01", 1)]
+    assert len(stats["top10_usernames"]) == 10
+    assert stats["top10_today"][1:] == [
+        ("u0" + str(i), "7.7.7.7", "h", "DE", 1) for i in range(9)
+    ]
+    assert stats["rev_dns_error_counts"] == [
+        (f"E{i:02d}", 1) for i in range(12)
+    ] + [("Timeout", 1)]
+    assert stats["total_rev_dns_failures"] == 13
 
 
 def test_report_leaves_no_cached_data(spark):
