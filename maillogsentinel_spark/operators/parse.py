@@ -6,13 +6,17 @@ Reference semantics (all in /root/reference/lib/maillogsentinel/log_utils.py):
 - P2 SASL predicate (log_utils.py:42,86-89): first IPv4 in the remainder
   followed (non-greedily) by ``sasl_username=<up-to-comma>`` — lines
   without it are dropped. This is THE selective predicate; it runs before
-  any enrichment, and in Spark it is a codegen-side regexp filter that
-  Catalyst keeps below the joins.
+  any enrichment, and Catalyst keeps it below the joins.
 - P3 date synthesis (log_utils.py:21-34,92-96): month-abbr map + zero-pad
   day + HH:MM (seconds truncated) + an *injected* year (parser.py:97 uses
   wall clock; we take it as a parameter for reproducibility).
 - P4 sanitization  (log_utils.py:100-101,109-111): strip; CR/LF → space in
   the username.
+
+Lines without the literal ``sasl_username=``, which every P2 match
+needs, are dropped before any regex runs (Sparser's raw-text pre-filter,
+VLDB 2018). P1 and P2 are one anchored regex whose lazy ``.*?`` tries
+the remainder's positions in the order the reference's ``re.search`` does.
 
 Everything is built-in expressions — one WholeStageCodegen span, no UDF.
 """
@@ -22,12 +26,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# P1 — syslog prefix. Groups: 1=month 2=day 3=HH:MM:SS 4=server 5=rest.
+# P1 + P2. Groups: 1=month 2=day 3=HH:MM:SS 4=server 5=ip 6=user.
 # (?s): Python's `.` matches \r (Java's default doesn't); lines may carry
 # stray CRs (the reference test at test_log_utils.py:162 has one).
-SYSLOG_RE = r"(?s)^([A-Z][a-z]{2})\s+(\d{1,2})\s+(\d{2}:\d{2}:\d{2})\s+(\S+)\s+(.*)$"
-# P2 — SASL failure. Groups: 1=ip 2=user
-SASL_RE = r"(?s)(\d{1,3}(?:\.\d{1,3}){3}).*?sasl_username=([^,]+)"
+SASL_LINE_RE = (
+    r"(?s)^([A-Z][a-z]{2})\s+(\d{1,2})\s+(\d{2}:\d{2}:\d{2})\s+(\S+)\s+"
+    r".*?(\d{1,3}(?:\.\d{1,3}){3}).*?sasl_username=([^,]+)"
+)
 
 MONTHS = {
     "Jan": 1, "Feb": 2, "Mar": 3, "Apr": 4, "May": 5, "Jun": 6,
@@ -42,32 +47,27 @@ def month_num(mon: Column) -> Column:
     return mapping[mon]
 
 
-def parse_sasl_lines(lines: DataFrame, year: int, value_col: str = "value") -> DataFrame:
+def parse_sasl_lines(lines: DataFrame, year: int) -> DataFrame:
     """``value:string`` lines → (server, ts, ip, user).
 
     ``year`` is the injected wall-clock year (SURVEY §7 hard-part 3: never
     call now() inside an operator).
     """
-    v = F.col(value_col)
-    parsed = lines.select(
-        F.regexp_extract(v, SYSLOG_RE, 1).alias("_mon"),
-        F.regexp_extract(v, SYSLOG_RE, 2).alias("_day"),
-        F.regexp_extract(v, SYSLOG_RE, 3).alias("_time"),
-        F.regexp_extract(v, SYSLOG_RE, 4).alias("server"),
-        F.regexp_extract(v, SYSLOG_RE, 5).alias("_rest"),
+    v = F.col("value")
+    # Every SASL_LINE_RE match contains this literal.
+    parsed = (
+        lines.filter(v.contains("sasl_username="))
+        .select(
+            F.regexp_extract(v, SASL_LINE_RE, 1).alias("_mon"),
+            F.regexp_extract(v, SASL_LINE_RE, 2).alias("_day"),
+            F.regexp_extract(v, SASL_LINE_RE, 3).alias("_time"),
+            F.regexp_extract(v, SASL_LINE_RE, 4).alias("server"),
+            F.regexp_extract(v, SASL_LINE_RE, 5).alias("ip"),
+            F.regexp_extract(v, SASL_LINE_RE, 6).alias("_user_raw"),
+        )
+        # regexp_extract yields '' on no-match; every match has an ip.
+        .filter(F.col("ip") != "")
     )
-    # P1 filter: regexp_extract yields '' on no-match.
-    parsed = parsed.filter(F.col("_mon") != "")
-    # P2 extract + filter on the remainder only (reference searches the
-    # remainder after the prefix match, log_utils.py:86).
-    parsed = parsed.select(
-        "server",
-        "_mon",
-        "_day",
-        "_time",
-        F.regexp_extract("_rest", SASL_RE, 1).alias("ip"),
-        F.regexp_extract("_rest", SASL_RE, 2).alias("_user_raw"),
-    ).filter(F.col("ip") != "")
 
     # P3: timestamp with injected year; seconds truncated (log_utils.py:95
     # `time[:5]`). Built by ARITHMETIC, not string parsing: under ANSI

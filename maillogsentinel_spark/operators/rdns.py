@@ -96,10 +96,11 @@ def enrich_rdns(
 
     ``ip_source``: optional cheaper projection producing (a superset of)
     the event IPs as an ``ip`` column. The dim branch recomputes its
-    whole upstream plan just to list distinct IPs; when the events DF
-    sits on an expensive pipeline (parse, joins), pass the raw scan
-    projection instead — resolving extra IPs never changes the left
-    join's result.
+    whole upstream plan just to list distinct IPs unless that plan ends
+    in an exchange Spark can reuse (``build_events`` ends its scan in a
+    round-robin exchange, so it passes none). Otherwise pass a cheaper
+    projection, as the catalog's ``mail_report_top10_today`` does —
+    resolving extra IPs never changes the left join's result.
     """
     if isinstance(resolver, DataFrame):
         dim = resolver_from_table(resolver)

@@ -4,11 +4,13 @@ as one declarative Catalyst plan:
 
     read logs → parse/filter (P1-P4) → rDNS (J2) → geo (J1+J3) → events
 
-Catalyst keeps the selective SASL regex filter below both joins (they
-only depend on `ip`), so enrichment work is proportional to matched
-lines — the same ordering the reference hand-codes
-(log_utils.py:82-89 before :103-123), but verified by `.explain()`
-instead of promised by code layout.
+Catalyst keeps the selective SASL filters (the ``sasl_username=``
+literal, then the line regex) below the round-robin exchange and both
+joins (they only depend on `ip`), so the shuffle and the enrichment
+work are proportional to matched lines — the same ordering the
+reference hand-codes (log_utils.py:82-89 before :103-123), but verified
+by the physical plan (tests/test_pipeline.py) instead of promised by
+code layout.
 """
 
 from __future__ import annotations
@@ -38,19 +40,12 @@ def build_events(
     """
     from pyspark.sql import functions as F
 
-    # A mail deployment's input is typically ONE fat log (plus a few
-    # rotations) — 2-3 scan splits for a 100-200 MB plain file, exactly
-    # ONE for any .gz (gzip is never splittable) — so the per-line
-    # regex parse and the rDNS stage would run on 2-3 of N cores.
-    # Round-robin repartition restores parallelism, gated on the actual
-    # scan split count so a many-files ingest (the at-scale layout)
-    # skips the shuffle entirely; the shuffled payload is raw lines,
-    # which the parse immediately collapses to matched events.
-    sc = lines.sparkSession.sparkContext
-    cpus = sc.defaultParallelism
-    if lines.rdd.getNumPartitions() < max(2, cpus // 2):
-        lines = lines.repartition(cpus)
-
+    # Round-robin over all cores: a single .gz (never splittable) or one
+    # fat plain log is otherwise parsed and resolved on 1-3 of them.
+    # Catalyst pushes the parse's filters below the exchange, so it
+    # carries only candidate lines, and the rDNS distinct-IP branch
+    # reuses the same exchange, so the log is read once.
+    lines = lines.repartition(lines.sparkSession.sparkContext.defaultParallelism)
     ev = parse_sasl_lines(lines, year=year)
     ev = enrich_rdns(ev, resolver)
     if geo_country is not None and geo_asn is not None:
