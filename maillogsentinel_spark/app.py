@@ -187,7 +187,16 @@ def run_sql_export(cfg: dict, out_dir: str | None = None) -> int:
     """--sql-export: events → BEGIN TRANSACTION; INSERT…; COMMIT; file
     (byte-compat S8 shape, timestamped filename). Rows failing NOT-NULL
     casts are quarantined, not silently skipped (documented divergence
-    from the reference's offset-advance-past-errors)."""
+    from the reference's offset-advance-past-errors).
+
+    One Spark job collects the typed rows; the statements and both
+    counts come from them. The script is written under a name the
+    importer's ``*.sql`` glob skips, then hard-linked to its final name:
+    the importer never sees a partial script, and an existing file (a
+    second export in the same minute) is never overwritten — the export
+    raises ``FileExistsError``."""
+    import logging
+
     from .sources.sqlio import cast_with_mapping, insert_statements, load_mapping
     from .sources.store import csv_projection, read_events
 
@@ -196,17 +205,23 @@ def run_sql_export(cfg: dict, out_dir: str | None = None) -> int:
         read_events(spark, os.path.join(cfg["working_dir"], "store"))
     )
     specs = load_mapping(cfg["column_mapping_file"] or _default_mapping())
-    good, quarantined = cast_with_mapping(csv_shape, specs)
-    text = insert_statements(good, cfg["table_name"], specs)
+    rows = cast_with_mapping(csv_shape, specs).collect()
+    nq = sum(1 for r in rows if r["violations"])
     out_dir = out_dir or os.path.join(cfg["working_dir"], "sql_export")
     os.makedirs(out_dir, exist_ok=True)
     stamp = _dt.datetime.now().strftime("%Y%m%d_%H%M")
     path = os.path.join(out_dir, f"{stamp}_maillogsentinel_export.sql")
-    with open(path, "w", encoding="utf-8") as f:
-        f.write(text)
-    nq = quarantined.count()
-    if nq:
-        print(f"# quarantined {nq} row(s)", file=sys.stderr)
+    tmp = f"{path}.{os.getpid()}.tmp"
+    try:
+        with open(tmp, "w", encoding="utf-8") as f:
+            f.writelines(insert_statements(
+                (r for r in rows if not r["violations"]), cfg["table_name"], specs))
+        os.link(tmp, path)
+    finally:
+        os.unlink(tmp)
+    msg = f"exported {len(rows) - nq} row(s), quarantined {nq} row(s)"
+    logging.getLogger(__name__).info(msg)
+    print(f"# {msg}", file=sys.stderr)
     print(path)
     return 0
 
@@ -220,7 +235,8 @@ def run_sql_import(cfg: dict, sql_dir: str | None = None) -> int:
     log_path = os.path.join(cfg["working_dir"], "sql_imported_files.log")
     done = set()
     if os.path.exists(log_path):
-        done = set(open(log_path, encoding="utf-8").read().split())
+        with open(log_path, encoding="utf-8") as f:
+            done = set(f.read().split())
     conn = sqlite3.connect(os.path.join(cfg["working_dir"], cfg["db_path"]))
     try:
         from .sources.sqlio import load_mapping, sqlite_ddl
@@ -232,7 +248,8 @@ def run_sql_import(cfg: dict, sql_dir: str | None = None) -> int:
             base = os.path.basename(p)
             if base in done:
                 continue
-            conn.executescript(open(p, encoding="utf-8").read())
+            with open(p, encoding="utf-8") as f:
+                conn.executescript(f.read())
             with open(log_path, "a", encoding="utf-8") as f:
                 f.write(base + "\n")
             n += 1

@@ -9,16 +9,18 @@ Spark-first shape:
 - the mapping drives a declarative ``select(cast...)`` (P10) with
   null-ish normalization (P7, sql_exporter.py:217-226): '', 'null',
   'na', 'n/a' (case-insensitive) → NULL;
-- NOT NULL violations are split into a quarantine DataFrame instead of
-  failing the whole batch — a documented, strictly-safer divergence from
-  the reference, which *advances its offset past* failed rows
+- NOT NULL violations are named in a ``violations`` column and those
+  rows are quarantined instead of failing the whole batch — a
+  documented, strictly-safer divergence from the reference, which *advances its offset past* failed rows
   (sql_exporter.py:621-630, at-least-once with permanent row loss);
 - DDL generation translates the MySQL-ish defs to SQLite exactly like
   sql_importer.py:149-248 (AUTO_INCREMENT PK → INTEGER PRIMARY KEY
   AUTOINCREMENT, VARCHAR/DATETIME → TEXT, ENUM → TEXT + CHECK(...));
-- the sink here uses the stdlib sqlite3 driver batched from
-  ``toLocalIterator`` (no JDBC driver in this container); on a cluster
-  the same frame goes through ``df.write.jdbc`` untouched.
+- the SQLite sink uses the stdlib sqlite3 driver, one transaction per
+  call fed one partition at a time from ``toLocalIterator`` (no JDBC
+  driver in this container); on a cluster the same frame goes through
+  ``df.write.jdbc`` untouched. The ``.sql`` exporter formats rows that
+  ``app.run_sql_export`` collected in one Spark job.
 """
 
 from __future__ import annotations
@@ -26,9 +28,10 @@ from __future__ import annotations
 import json
 import re
 import sqlite3
+from collections.abc import Iterable, Iterator
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 NULLISH = ["", "null", "na", "n/a"]
@@ -93,6 +96,12 @@ def normalize_nullish(col: Column) -> Column:
     return F.when(F.lower(F.trim(col)).isin(NULLISH), None).otherwise(col)
 
 
+def _inserted_specs(specs: list[ColumnSpec]) -> list[ColumnSpec]:
+    """The columns an INSERT writes: all but an AUTO_INCREMENT key the
+    database generates (the reference skips it too)."""
+    return [s for s in specs if not (s.auto_increment and s.source_col is None)]
+
+
 def _cast_one(col: Column, spec: ColumnSpec) -> Column:
     if spec.base_type == "INT":
         return col.try_cast("long")
@@ -110,17 +119,14 @@ def _cast_one(col: Column, spec: ColumnSpec) -> Column:
     return col.cast("string")
 
 
-def cast_with_mapping(
-    df: DataFrame, specs: list[ColumnSpec]
-) -> tuple[DataFrame, DataFrame]:
-    """(good, quarantine): typed select per the mapping; rows where any
-    NOT NULL target column came out NULL (null-ish input, bad int, bad
-    date, out-of-enum) go to quarantine with a reasons column."""
+def cast_with_mapping(df: DataFrame, specs: list[ColumnSpec]) -> DataFrame:
+    """Typed select per the mapping plus a ``violations`` column: the
+    NOT NULL target columns that came out NULL (null-ish input, bad int,
+    bad date, out-of-enum). Rows with ``size(violations) > 0`` are the
+    quarantine; the rest are the rows to insert."""
     out_cols: list[Column] = []
     violation_reasons: list[Column] = []
-    for spec in specs:
-        if spec.auto_increment and spec.source_col is None:
-            continue  # generated by the database (reference skips it too)
+    for spec in _inserted_specs(specs):
         src = F.col(spec.source_col)
         normalized = normalize_nullish(src.cast("string"))
         casted = _cast_one(normalized, spec)
@@ -134,12 +140,7 @@ def cast_with_mapping(
         if violation_reasons
         else F.array().cast("array<string>")
     )
-    typed = df.select(*out_cols, viol.alias("__violations"))
-    good = typed.filter(F.size("__violations") == 0).drop("__violations")
-    bad = typed.filter(F.size("__violations") > 0).withColumnRenamed(
-        "__violations", "violations"
-    )
-    return good, bad
+    return df.select(*out_cols, viol.alias("violations"))
 
 
 def sqlite_ddl(specs: list[ColumnSpec], table: str) -> str:
@@ -169,19 +170,31 @@ def sqlite_ddl(specs: list[ColumnSpec], table: str) -> str:
 LEDGER_TABLE = "_committed_batches"
 
 
+# DATETIME values as SQLite stores them and as the .sql files spell them
+DATETIME_TEXT = "%Y-%m-%d %H:%M:%S"
+
+
+def _sql_value(v):
+    return v.strftime(DATETIME_TEXT) if hasattr(v, "strftime") else v
+
+
 def write_sqlite(
     df: DataFrame,
     db_path: str,
     table: str,
     specs: list[ColumnSpec],
-    batch_size: int = 10_000,
     batch_id: int | None = None,
 ) -> int:
-    """Append ``df`` (already cast via cast_with_mapping) into SQLite.
+    """Append the rows of ``df`` (typed by cast_with_mapping, quarantined
+    rows filtered out) into SQLite in ONE transaction; returns the
+    number of rows written.
 
-    Driver-side stdlib sqlite3 in batches (this container has no JDBC
-    sqlite driver); on a real cluster: ``df.write.jdbc(...,
-    mode='append')`` with the same DDL.
+    Driver-side stdlib sqlite3 (this container has no JDBC sqlite
+    driver); on a real cluster: ``df.write.jdbc(..., mode='append')``
+    with the same DDL. Rows are pulled with ``toLocalIterator``, one
+    partition at a time, and fed to ``executemany`` as they arrive: the
+    first availableNow batch of ``start_sql_export`` can be the whole
+    store, so the driver never holds more than one partition of it.
 
     With ``batch_id`` set (the streaming foreachBatch path) the write is
     IDEMPOTENT: a ledger row in ``_committed_batches`` is inserted in
@@ -191,11 +204,9 @@ def write_sqlite(
     checkpoint commit replays the batch — so the ledger is what turns
     the resume into effective exactly-once (the reference's exporter/
     importer pair has the same hole with no ledger,
-    sql_exporter.py:621-630). Without ``batch_id`` (one-shot batch
-    export) each chunk commits separately, mirroring the reference's
-    per-file transactionality (sql_importer.py:457-498).
+    sql_exporter.py:621-630).
     """
-    cols = [s.sql_col for s in specs if not (s.auto_increment and s.source_col is None)]
+    cols = [s.sql_col for s in _inserted_specs(specs)]
     placeholders = ", ".join("?" for _ in cols)
     collist = ", ".join(f'"{c}"' for c in cols)
     insert = f'INSERT INTO "{table}" ({collist}) VALUES ({placeholders})'
@@ -209,7 +220,6 @@ def write_sqlite(
                 "(target_table TEXT NOT NULL, batch_id INTEGER NOT NULL, "
                 "PRIMARY KEY (target_table, batch_id))"
             )
-            conn.commit()
             already = conn.execute(
                 f'SELECT 1 FROM "{LEDGER_TABLE}" WHERE target_table = ? '
                 "AND batch_id = ?",
@@ -217,51 +227,17 @@ def write_sqlite(
             ).fetchone()
             if already:
                 return 0
-
-        def rows():
-            for row in df.toLocalIterator():
-                yield [
-                    v.strftime("%Y-%m-%d %H:%M:%S") if hasattr(v, "strftime") else v
-                    for v in (row[c] for c in cols)
-                ]
-
-        n = 0
-        if batch_id is not None:
-            # One transaction for the whole micro-batch + its ledger row:
-            # atomically all-or-nothing under crash/replay.
-            try:
-                conn.execute("BEGIN")
-                batch = []
-                for vals in rows():
-                    batch.append(vals)
-                    if len(batch) >= batch_size:
-                        conn.executemany(insert, batch)
-                        n += len(batch)
-                        batch = []
-                if batch:
-                    conn.executemany(insert, batch)
-                    n += len(batch)
+        # sqlite3 opens the transaction at the first INSERT; ``with conn``
+        # commits the rows and the ledger row together or rolls both back
+        with conn:
+            n = conn.executemany(
+                insert,
+                ([_sql_value(row[c]) for c in cols] for row in df.toLocalIterator()),
+            ).rowcount
+            if batch_id is not None:
                 conn.execute(
                     f'INSERT INTO "{LEDGER_TABLE}" VALUES (?, ?)', (table, batch_id)
                 )
-                conn.commit()
-            except BaseException:
-                conn.rollback()
-                raise
-            return n
-
-        batch = []
-        for vals in rows():
-            batch.append(vals)
-            if len(batch) >= batch_size:
-                with conn:
-                    conn.executemany(insert, batch)
-                n += len(batch)
-                batch = []
-        if batch:
-            with conn:
-                conn.executemany(insert, batch)
-            n += len(batch)
         return n
     finally:
         conn.close()
@@ -275,26 +251,27 @@ def sql_literal(v) -> str:
     they are unrepresentable inside a .sql script (sqlite3 refuses the
     whole script), and silently losing every row in the file is the
     failure mode the exporter exists to avoid."""
+    v = _sql_value(v)
     if v is None:
         return "NULL"
-    if hasattr(v, "strftime"):
-        return "'" + v.strftime("%Y-%m-%d %H:%M:%S") + "'"
     if isinstance(v, (int, float)):
         return str(v)
     return "'" + str(v).replace("\x00", "").replace("'", "''") + "'"
 
 
 def insert_statements(
-    df: DataFrame, table: str, specs: list[ColumnSpec]
-) -> str:
-    """S8 byte-compat path: BEGIN TRANSACTION; INSERT ...; COMMIT; text
-    with the reference's escaping ('→'', sql_exporter.py:187-199)."""
-    cols = [s.sql_col for s in specs if not (s.auto_increment and s.source_col is None)]
-
+    rows: Iterable[Row], table: str, specs: list[ColumnSpec]
+) -> Iterator[str]:
+    """S8 byte-compat path: the lines (newline-terminated) of a
+    BEGIN TRANSACTION; INSERT ...; COMMIT; script for ``rows`` (typed by
+    cast_with_mapping, quarantined rows filtered out), with the
+    reference's escaping ('→'', sql_exporter.py:187-199). Lines are made
+    one at a time, so a caller writing them to a file never holds the
+    whole script."""
+    cols = [s.sql_col for s in _inserted_specs(specs)]
     collist = ", ".join(f"`{c}`" for c in cols)
-    lines = ["BEGIN TRANSACTION;"]
-    for row in df.toLocalIterator():
+    yield "BEGIN TRANSACTION;\n"
+    for row in rows:
         vals = ", ".join(sql_literal(row[c]) for c in cols)
-        lines.append(f"INSERT INTO `{table}` ({collist}) VALUES ({vals});")
-    lines.append("COMMIT;")
-    return "\n".join(lines) + "\n"
+        yield f"INSERT INTO `{table}` ({collist}) VALUES ({vals});\n"
+    yield "COMMIT;\n"

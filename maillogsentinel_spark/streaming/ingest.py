@@ -135,7 +135,8 @@ def start_sql_export(
     csv_shaped = csv_projection(spark.readStream.schema(schema).parquet(store_path))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        good, quarantine = cast_with_mapping(batch_df, specs)
+        typed = cast_with_mapping(batch_df, specs)
+        quarantine = typed.filter(F.size("violations") > 0)
         if quarantine_path is not None:
             (
                 quarantine.withColumn("batch_id", F.lit(batch_id))
@@ -149,7 +150,8 @@ def start_sql_export(
                     "sql export batch %d: %d NOT-NULL-violating rows "
                     "quarantined (no quarantine_path given)", batch_id, n_bad
                 )
-        write_sqlite(good, db_path, table, specs, batch_id=batch_id)
+        write_sqlite(typed.filter(F.size("violations") == 0), db_path, table, specs,
+                     batch_id=batch_id)
 
     writer = csv_shaped.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint_dir

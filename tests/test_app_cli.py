@@ -1,8 +1,11 @@
 """Main CLI modes end-to-end: extract -> report -> sql-export -> sql-import."""
 
 import csv
+import datetime
+import errno
 import os
 import sqlite3
+from types import SimpleNamespace
 
 import pytest
 
@@ -16,7 +19,9 @@ LINE = ("Aug 12 06:57:{s:02d} srv1 postfix/smtps/smtpd[1]: warning: "
 def test_cli_modes_end_to_end(spark, tmp_path, capsys, monkeypatch):
     logs = tmp_path / "logs"
     logs.mkdir()
-    (logs / "mail.log").write_text("".join(LINE.format(s=i, o=i) for i in range(4)))
+    # four good lines and one whose username is null-ish (quarantined)
+    (logs / "mail.log").write_text("".join(LINE.format(s=i, o=i) for i in range(4))
+                                   + LINE.format(s=4, o=4).replace("u4@x.com", "NA"))
     wd = tmp_path / "work"
     ini = tmp_path / "mls.conf"
     ini.write_text(f"""[paths]
@@ -30,7 +35,7 @@ csv_filename = maillogsentinel.csv
     cfg = app.load_config(str(ini))
     assert app.run_extract(cfg, year=2025, resolver=lambda ip: ("h-" + ip, None)) == 0
     store_rows = spark.read.parquet(str(wd / "store")).collect()
-    assert len(store_rows) == 4
+    assert len(store_rows) == 5
 
     # report for the log day
     assert app.main(["--config", str(ini), "--report", "--date", "12/08/2025"]) == 0
@@ -39,10 +44,13 @@ csv_filename = maillogsentinel.csv
 
     # sql export then import
     assert app.main(["--config", str(ini), "--sql-export"]) == 0
-    sql_path = capsys.readouterr().out.strip().splitlines()[-1]
+    out, err = capsys.readouterr()
+    sql_path = out.strip().splitlines()[-1]
     assert os.path.exists(sql_path)
-    body = open(sql_path).read()
-    assert body.startswith("BEGIN TRANSACTION;") and "INSERT INTO" in body
+    with open(sql_path) as f:
+        body = f.read()
+    assert body.startswith("BEGIN TRANSACTION;") and body.count("INSERT INTO") == 4
+    assert "# exported 4 row(s), quarantined 1 row(s)" in err
 
     assert app.main(["--config", str(ini), "--sql-import"]) == 0
     db = sqlite3.connect(str(wd / "maillogsentinel.sqlite"))
@@ -91,6 +99,79 @@ def _setup_extract(spark, tmp_path, monkeypatch):
     cfg = app.load_config(None)
     cfg.update(working_dir=str(wd), mail_log=str(logs / "mail.log"))
     return logs, wd, cfg
+
+
+def _export_store(spark, tmp_path, monkeypatch):
+    """A one-day store of three events; returns the config."""
+    logs, wd, cfg = _setup_extract(spark, tmp_path, monkeypatch)
+    (logs / "mail.log").write_text("".join(LINE.format(s=i, o=i) for i in range(3)))
+    assert app.run_extract(cfg, year=2025, resolver=lambda ip: ("h-" + ip, None)) == 0
+    return cfg
+
+
+def test_sql_export_runs_one_spark_job(spark, tmp_path, monkeypatch):
+    """The export pulls its rows in one job; the statements and the
+    quarantine count come from them. A store of at most 32 days is
+    listed without a job."""
+    cfg = _export_store(spark, tmp_path, monkeypatch)
+    sc = spark.sparkContext
+    sc.setJobGroup("sql-export-jobs", "sql-export-jobs")
+    try:
+        assert app.run_sql_export(cfg, out_dir=str(tmp_path / "sql")) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("sql-export-jobs")) == 1
+
+
+class _FrozenClock:
+    @staticmethod
+    def now():
+        return datetime.datetime(2025, 8, 12, 7, 0)
+
+
+def test_sql_export_never_overwrites_a_published_file(spark, tmp_path, monkeypatch):
+    """Two exports in the same minute: the second raises and the first
+    file, which an import may already have read, stays as it was."""
+    cfg = _export_store(spark, tmp_path, monkeypatch)
+    monkeypatch.setattr(app, "_dt", SimpleNamespace(datetime=_FrozenClock))
+    out = tmp_path / "sql"
+    assert app.run_sql_export(cfg, out_dir=str(out)) == 0
+    (first,) = out.glob("*.sql")
+    before = first.read_bytes()
+    with pytest.raises(FileExistsError):
+        app.run_sql_export(cfg, out_dir=str(out))
+    assert list(out.iterdir()) == [first]
+    assert first.read_bytes() == before
+
+
+def test_sql_export_failure_mid_write_publishes_nothing(spark, tmp_path, monkeypatch):
+    """The disk fills after 40 characters of the script: no ``.sql`` file
+    is left, so the importer never runs a script without its COMMIT."""
+    cfg = _export_store(spark, tmp_path, monkeypatch)
+
+    def open_disk_full_after_40_chars(path, mode="r", **kw):
+        f = open(path, mode, **kw)
+        if "w" in mode:
+            real_write, written = f.write, [0]
+
+            def write(text):
+                room = 40 - written[0]
+                if len(text) > room:
+                    real_write(text[:room])
+                    f.flush()
+                    raise OSError(errno.ENOSPC, "No space left on device")
+                written[0] += len(text)
+                return real_write(text)
+
+            f.write = write
+        return f
+
+    monkeypatch.setattr(app, "open", open_disk_full_after_40_chars, raising=False)
+    out = tmp_path / "sql"
+    with pytest.raises(OSError, match="No space left"):
+        app.run_sql_export(cfg, out_dir=str(out))
+    assert list(out.iterdir()) == []
 
 
 def test_csv_mirror_equals_store_after_two_extracts(spark, tmp_path, monkeypatch):

@@ -558,7 +558,7 @@ def test_sql_export_batch_replay_is_idempotent(spark, tmp_path):
         "ip", "user", "hostname", "reverse_dns_status",
         "country_code", "asn", "aso",
     )
-    good, _ = cast_with_mapping(ev, specs)
+    good = cast_with_mapping(ev, specs)
     assert write_sqlite(good, db, "events", specs, batch_id=0) == 2
     # replay of the same micro-batch: ledger row already present → no-op
     assert write_sqlite(good, db, "events", specs, batch_id=0) == 0
