@@ -189,33 +189,31 @@ def run_sql_export(cfg: dict, out_dir: str | None = None) -> int:
     casts are quarantined, not silently skipped (documented divergence
     from the reference's offset-advance-past-errors).
 
-    One Spark job collects the typed rows; the statements and both
+    One Spark job collects the typed rows (their serialized size is
+    capped by ``spark.driver.maxResultSize``); the statements and both
     counts come from them. The script is written under a name the
-    importer's ``*.sql`` glob skips, then hard-linked to its final name:
-    the importer never sees a partial script, and an existing file (a
-    second export in the same minute) is never overwritten — the export
-    raises ``FileExistsError``."""
+    importer's ``*.sql`` glob skips, then hard-linked to its final name,
+    so the importer never sees a partial script and an existing file is
+    never overwritten (``FileExistsError``). A filesystem without hard
+    links (vfat/exFAT, some SMB or FUSE mounts) fails every export."""
     import logging
 
     from .sources.sqlio import cast_with_mapping, insert_statements, load_mapping
     from .sources.store import csv_projection, read_events
 
-    spark = _spark(cfg)
-    csv_shape = csv_projection(
-        read_events(spark, os.path.join(cfg["working_dir"], "store"))
-    )
+    events = read_events(_spark(cfg), os.path.join(cfg["working_dir"], "store"))
     specs = load_mapping(cfg["column_mapping_file"] or _default_mapping())
-    rows = cast_with_mapping(csv_shape, specs).collect()
+    rows = cast_with_mapping(csv_projection(events), specs).collect()
     nq = sum(1 for r in rows if r["violations"])
     out_dir = out_dir or os.path.join(cfg["working_dir"], "sql_export")
     os.makedirs(out_dir, exist_ok=True)
     stamp = _dt.datetime.now().strftime("%Y%m%d_%H%M")
     path = os.path.join(out_dir, f"{stamp}_maillogsentinel_export.sql")
     tmp = f"{path}.{os.getpid()}.tmp"
+    f = open(tmp, "w", encoding="utf-8")  # before ``try``: a failed open leaves no tmp
     try:
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.writelines(insert_statements(
-                (r for r in rows if not r["violations"]), cfg["table_name"], specs))
+        with f:
+            f.writelines(insert_statements(rows, cfg["table_name"], specs))
         os.link(tmp, path)
     finally:
         os.unlink(tmp)

@@ -185,9 +185,10 @@ def write_sqlite(
     specs: list[ColumnSpec],
     batch_id: int | None = None,
 ) -> int:
-    """Append the rows of ``df`` (typed by cast_with_mapping, quarantined
-    rows filtered out) into SQLite in ONE transaction; returns the
-    number of rows written.
+    """Append the rows of ``df`` (typed by cast_with_mapping) that have no
+    violations into SQLite in ONE transaction; returns the number of rows
+    written. Quarantined rows are skipped here, so callers pass the
+    typed frame as it is.
 
     Driver-side stdlib sqlite3 (this container has no JDBC sqlite
     driver); on a real cluster: ``df.write.jdbc(..., mode='append')``
@@ -210,6 +211,7 @@ def write_sqlite(
     placeholders = ", ".join("?" for _ in cols)
     collist = ", ".join(f'"{c}"' for c in cols)
     insert = f'INSERT INTO "{table}" ({collist}) VALUES ({placeholders})'
+    good = df.filter(F.size("violations") == 0)
 
     conn = sqlite3.connect(db_path)
     try:
@@ -232,7 +234,7 @@ def write_sqlite(
         with conn:
             n = conn.executemany(
                 insert,
-                ([_sql_value(row[c]) for c in cols] for row in df.toLocalIterator()),
+                ([_sql_value(row[c]) for c in cols] for row in good.toLocalIterator()),
             ).rowcount
             if batch_id is not None:
                 conn.execute(
@@ -263,8 +265,8 @@ def insert_statements(
     rows: Iterable[Row], table: str, specs: list[ColumnSpec]
 ) -> Iterator[str]:
     """S8 byte-compat path: the lines (newline-terminated) of a
-    BEGIN TRANSACTION; INSERT ...; COMMIT; script for ``rows`` (typed by
-    cast_with_mapping, quarantined rows filtered out), with the
+    BEGIN TRANSACTION; INSERT ...; COMMIT; script for those ``rows``
+    (typed by cast_with_mapping) that have no violations, with the
     reference's escaping ('→'', sql_exporter.py:187-199). Lines are made
     one at a time, so a caller writing them to a file never holds the
     whole script."""
@@ -272,6 +274,8 @@ def insert_statements(
     collist = ", ".join(f"`{c}`" for c in cols)
     yield "BEGIN TRANSACTION;\n"
     for row in rows:
+        if row["violations"]:
+            continue
         vals = ", ".join(sql_literal(row[c]) for c in cols)
         yield f"INSERT INTO `{table}` ({collist}) VALUES ({vals});\n"
     yield "COMMIT;\n"

@@ -150,8 +150,7 @@ def start_sql_export(
                     "sql export batch %d: %d NOT-NULL-violating rows "
                     "quarantined (no quarantine_path given)", batch_id, n_bad
                 )
-        write_sqlite(typed.filter(F.size("violations") == 0), db_path, table, specs,
-                     batch_id=batch_id)
+        write_sqlite(typed, db_path, table, specs, batch_id=batch_id)
 
     writer = csv_shaped.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint_dir

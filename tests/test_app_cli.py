@@ -145,31 +145,44 @@ def test_sql_export_never_overwrites_a_published_file(spark, tmp_path, monkeypat
     assert first.read_bytes() == before
 
 
-def test_sql_export_failure_mid_write_publishes_nothing(spark, tmp_path, monkeypatch):
-    """The disk fills after 40 characters of the script: no ``.sql`` file
-    is left, so the importer never runs a script without its COMMIT."""
+def _open_disk_full_after_40_chars(path, mode="r", **kw):
+    f = open(path, mode, **kw)
+    if "w" in mode:
+        real_write, written = f.write, [0]
+
+        def write(text):
+            room = 40 - written[0]
+            if len(text) > room:
+                real_write(text[:room])
+                f.flush()
+                raise OSError(errno.ENOSPC, "No space left on device")
+            written[0] += len(text)
+            return real_write(text)
+
+        f.write = write
+    return f
+
+
+def _open_denied(path, mode="r", **kw):
+    if "w" in mode:
+        raise PermissionError(errno.EACCES, "Permission denied", path)
+    return open(path, mode, **kw)
+
+
+@pytest.mark.parametrize("faulty_open, error", [
+    (_open_disk_full_after_40_chars, "No space left"),
+    (_open_denied, "Permission denied"),
+])
+def test_sql_export_failure_mid_write_publishes_nothing(spark, tmp_path, monkeypatch,
+                                                         faulty_open, error):
+    """The disk fills after 40 characters of the script, or the script
+    cannot be created at all: no ``.sql`` file is left, so the importer
+    never runs a script without its COMMIT, and the export raises that
+    error, not one from cleaning up a file that was never made."""
     cfg = _export_store(spark, tmp_path, monkeypatch)
-
-    def open_disk_full_after_40_chars(path, mode="r", **kw):
-        f = open(path, mode, **kw)
-        if "w" in mode:
-            real_write, written = f.write, [0]
-
-            def write(text):
-                room = 40 - written[0]
-                if len(text) > room:
-                    real_write(text[:room])
-                    f.flush()
-                    raise OSError(errno.ENOSPC, "No space left on device")
-                written[0] += len(text)
-                return real_write(text)
-
-            f.write = write
-        return f
-
-    monkeypatch.setattr(app, "open", open_disk_full_after_40_chars, raising=False)
+    monkeypatch.setattr(app, "open", faulty_open, raising=False)
     out = tmp_path / "sql"
-    with pytest.raises(OSError, match="No space left"):
+    with pytest.raises(OSError, match=error):
         app.run_sql_export(cfg, out_dir=str(out))
     assert list(out.iterdir()) == []
 
